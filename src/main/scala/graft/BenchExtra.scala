@@ -16,12 +16,10 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.BenchExtra <sfDir> <q1,q2,...> [reps] [noop]
   * Development tool only — the driver artifact stays [[Bench]]. */
 object BenchExtra {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val names = args(1).split(',').toSeq
-    val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val useNoop = args.lift(3).contains("noop")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** The development tools' session: [[Bench]]'s local-mode conf key for
+    * key, with the optimizer rules registered only when absent. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -34,8 +32,18 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++
-      Seq(plans.PipBboxPushdown, plans.CellCoverPushdown)
+    val rules = Seq(plans.PipBboxPushdown, plans.CellCoverPushdown)
+    val have = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = have ++ rules.filterNot(have.contains)
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val names = args(1).split(',').toSeq
+    val reps = args.lift(2).map(_.toInt).getOrElse(3)
+    val useNoop = args.lift(3).contains("noop")
+    val spark = session()
 
     val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -66,15 +74,8 @@ object BenchExtra {
       // CLEAN stage root each rep (the driver's cold ann_index_build)
       val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
         if (name == "ann_index_build") { (sp, d) =>
-          Seq("/tmp/graft_ann_stages", "/tmp/graft_text_stages").foreach { p =>
-            val dirp = java.nio.file.Paths.get(p)
-            if (java.nio.file.Files.exists(dirp)) {
-              val walk = java.nio.file.Files.walk(dirp)
-              try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-                .forEach(f => java.nio.file.Files.deleteIfExists(f))
-              finally walk.close()
-            }
-          }
+          Seq("/tmp/graft_ann_stages", "/tmp/graft_text_stages")
+            .foreach(p => tables.StageRunner.rmTree(java.nio.file.Paths.get(p)))
           SparkEntry.annEnsureBuilt(sp, d)
           sp.range(1).toDF()
         } else SparkEntry.queries(name)

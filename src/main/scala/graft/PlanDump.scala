@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Dump `.explain("formatted")` for named contract queries to files —
   * the plan evidence for OPTIMIZATION_r06.md (guide §7.2). Usage:
   *   runMain graft.PlanDump <sfDir> <outDir> <q1,q2,...> [suffix]
@@ -14,20 +11,7 @@ object PlanDump {
     val outDir = args(1)
     val names = args(2).split(',').toSeq
     val suffix = args.lift(3).getOrElse("plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "32k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++
-      Seq(plans.PipBboxPushdown, plans.CellCoverPushdown)
+    val spark = BenchExtra.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       try {

@@ -71,17 +71,15 @@ object SparkEntry {
     * per micro-batch (here ~100k rows/batch -> 4 partitions ≈ 25k
     * rows/task; measured best-of {32: 13.8 s, 8: 7.0, 4: 3.1, 2: 2.5}
     * for the stream-stream join — 4 is the knee), NOT the batch shuffle
-    * width; production raises it via SPARK_GRAFT_STREAM_PARTITIONS /
-    * graft.streamShufflePartitions as stream volume demands. Results
-    * are partition-count-invariant. */
+    * width. Results are partition-count-invariant. */
   private def withStreamShuffle[A](s: SparkSession)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS",
-      sys.props.getOrElse("graft.streamShufflePartitions", "4"))
-    s.conf.set(key, n)
+    s.conf.set(key, StreamShufflePartitions)
     try body finally s.conf.set(key, prev)
   }
+  /** The streaming state-partition count: the measured knee above. */
+  private val StreamShufflePartitions = 4L
 
   /** Drive a Structured Streaming query over the events table to
     * completion through an in-memory sink and return the result table.
@@ -113,17 +111,6 @@ object SparkEntry {
     }
     s.table(qname)
   }
-
-  /** Recursive temp-dir cleanup for the streaming harnesses (ADVICE r5:
-    * per-invocation sink/checkpoint dirs must not leak into tmpdir). */
-  private def rmTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      catch { case _: java.io.IOException => () }
-      finally walk.close()
-    }
 
   /** Streaming harness over the DOCUMENTS table with a per-micro-batch
     * BATCH transform (`foreachBatch`) — the documented Structured
@@ -159,8 +146,11 @@ object SparkEntry {
         java.nio.file.Files.deleteIfExists(streamDir.resolve("documents.parquet"))
         java.nio.file.Files.deleteIfExists(streamDir)
       } catch { case _: java.io.IOException => () }
-      rmTree(java.nio.file.Paths.get(outDir))
-      rmTree(java.nio.file.Paths.get(ckDir))
+      // best-effort: the per-invocation sink/checkpoint dirs must not leak
+      // into tmpdir (ADVICE r5), but a failed delete must not fail the query
+      for (d <- Seq(outDir, ckDir))
+        try tables.StageRunner.rmTree(java.nio.file.Paths.get(d))
+        catch { case _: java.io.IOException => () }
     }
   }
 
@@ -326,9 +316,7 @@ object SparkEntry {
             portableHashing = oracleHashing))
         ()
       })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("SPARK_GRAFT_ANN_THREADS",
-        sys.props.getOrElse("graft.annBuildThreads", chains.size.toString)).toInt)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size)
     // The production session disables AQE partition coalescing for the
     // image-decode stages (byte-based coalescing starves CPU-dense
     // tasks — Bench class doc). The index build is the opposite regime:

@@ -1,8 +1,7 @@
 package graft.functions
 
-import graft.core.{CellId, CvRaster, Mercator}
+import graft.core.{CellId, Mercator}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Static kernel entry points invoked from whole-stage-generated code (plain
@@ -93,87 +92,4 @@ object GeoKernel {
     }
     false
   }
-
-  /** Rasterize a polyline (cv2.polylines closed=True lineType=4 parity,
-    * reference lib/helpers.py:84-88) onto the canvas of the given painter
-    * extent; returns painted cells as packed ids. Per-geometry local canvas
-    * — distributed rasterization is `explode(this) -> distinct`. */
-  def rasterizePolylineCells(lats: ArrayData, lngs: ArrayData, z: Int,
-                             offX: Double, offY: Double,
-                             txmin: Long, tymin: Long, width: Int, height: Int,
-                             thickness: Int): ArrayData = {
-    val n = lats.numElements()
-    val xs = new Array[Int](n)
-    val ys = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val cell = cellAtWgs(lats.getDouble(i), lngs.getDouble(i), z, offX, offY)
-      xs(i) = (CellId.tx(cell) - txmin).toInt
-      ys(i) = (CellId.ty(cell) - tymin).toInt
-      i += 1
-    }
-    val canvas = new CvRaster.Canvas(width, height)
-    CvRaster.polyLine(canvas, xs, ys, isClosed = true, thickness, 4)
-    cellsOf(canvas, z, txmin, tymin)
-  }
-
-  /** Rasterize a filled polygon (cv2.fillPoly lineType=4 parity, reference
-    * lib/helpers.py:90-94). */
-  def rasterizeFillCells(lats: ArrayData, lngs: ArrayData, z: Int,
-                         offX: Double, offY: Double,
-                         txmin: Long, tymin: Long, width: Int, height: Int): ArrayData = {
-    val n = lats.numElements()
-    val xs = new Array[Int](n)
-    val ys = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val cell = cellAtWgs(lats.getDouble(i), lngs.getDouble(i), z, offX, offY)
-      xs(i) = (CellId.tx(cell) - txmin).toInt
-      ys(i) = (CellId.ty(cell) - tymin).toInt
-      i += 1
-    }
-    val canvas = new CvRaster.Canvas(width, height)
-    CvRaster.fillPoly(canvas, xs, ys, 4)
-    cellsOf(canvas, z, txmin, tymin)
-  }
-
-  private def cellsOf(canvas: CvRaster.Canvas, z: Int, txmin: Long, tymin: Long): ArrayData = {
-    val out = new Array[Long](canvas.paintedCount)
-    var k = 0
-    val it = canvas.paintedPixels
-    while (it.hasNext) {
-      val (x, y) = it.next()
-      out(k) = CellId.pack(z, txmin + x, tymin + y)
-      k += 1
-    }
-    ArrayData.toArrayData(out)
-  }
-
-  /** Viewport cover cells for a square viewport of h px around a point
-    * (square-viewport quirk preserved, reference lib/layers.py:145-178).
-    * Emits cells row-major tymin..tymax x txmin..txmax. */
-  def viewportCells(lat: Double, lng: Double, z: Int, h: Int,
-                    offX: Double, offY: Double): ArrayData = {
-    val (txmin, txmax, tymin, tymax, _, _) =
-      graft.core.Viewport.tilesNearWgs(lat, lng, z, h, h, offX, offY)
-    val w = (txmax - txmin + 1).toInt
-    val ht = (tymax - tymin + 1).toInt
-    val out = new Array[Long](w * ht)
-    var k = 0
-    var ty = tymin
-    while (ty <= tymax) {
-      var tx = txmin
-      while (tx <= txmax) {
-        out(k) = CellId.pack(z, tx, ty); k += 1
-        tx += 1
-      }
-      ty += 1
-    }
-    ArrayData.toArrayData(out)
-  }
-
-  /** image_id string of a cell — reference tile path scheme
-    * "z{z}/x{x}y{y}" (lib/layers.py:51-56, without extension). */
-  def cellImageId(cell: Long): UTF8String =
-    UTF8String.fromString(s"z${CellId.z(cell)}/x${CellId.tx(cell)}y${CellId.ty(cell)}")
 }

@@ -32,9 +32,10 @@ object GeoUdfs {
     }
   }
 
-  /** cells painted by a width-`thickness` closed polyline (roads; reference
-    * always passes isClosed=True, lib/helpers.py:88). */
-  def rasterizePolyline(ext: Extent, thickness: Int)(lats: Column, lngs: Column): Column = {
+  /** Project a way's WGS vertices onto the extent's canvas, draw them with
+    * `draw`, and return the painted cells as packed ids. */
+  private def rasterize(ext: Extent)(draw: (CvRaster.Canvas, Array[Int], Array[Int]) => Unit)
+                       (lats: Column, lngs: Column): Column = {
     val f = udf { (la: Seq[Double], ln: Seq[Double]) =>
       val xs = new Array[Int](la.length); val ys = new Array[Int](la.length)
       var i = 0
@@ -45,31 +46,21 @@ object GeoUdfs {
         i += 1
       }
       val canvas = new CvRaster.Canvas(ext.width, ext.height)
-      CvRaster.polyLine(canvas, xs, ys, isClosed = true, thickness, 4)
+      draw(canvas, xs, ys)
       canvas.paintedPixels.map { case (x, y) =>
         CellId.pack(ext.z, ext.txmin + x, ext.tymin + y) }.toArray
     }
     f(lats, lngs)
   }
 
+  /** cells painted by a width-`thickness` closed polyline (roads; reference
+    * always passes isClosed=True, lib/helpers.py:88). */
+  def rasterizePolyline(ext: Extent, thickness: Int)(lats: Column, lngs: Column): Column =
+    rasterize(ext)((c, xs, ys) => CvRaster.polyLine(c, xs, ys, isClosed = true, thickness, 4))(lats, lngs)
+
   /** cells painted by cv2.fillPoly (exclusion zones; lib/helpers.py:90-94). */
-  def rasterizeFill(ext: Extent)(lats: Column, lngs: Column): Column = {
-    val f = udf { (la: Seq[Double], ln: Seq[Double]) =>
-      val xs = new Array[Int](la.length); val ys = new Array[Int](la.length)
-      var i = 0
-      while (i < la.length) {
-        val c = GeoKernel.cellAtWgs(la(i), ln(i), ext.z, ext.offX, ext.offY)
-        xs(i) = (CellId.tx(c) - ext.txmin).toInt
-        ys(i) = (CellId.ty(c) - ext.tymin).toInt
-        i += 1
-      }
-      val canvas = new CvRaster.Canvas(ext.width, ext.height)
-      CvRaster.fillPoly(canvas, xs, ys, 4)
-      canvas.paintedPixels.map { case (x, y) =>
-        CellId.pack(ext.z, ext.txmin + x, ext.tymin + y) }.toArray
-    }
-    f(lats, lngs)
-  }
+  def rasterizeFill(ext: Extent)(lats: Column, lngs: Column): Column =
+    rasterize(ext)((c, xs, ys) => CvRaster.fillPoly(c, xs, ys, 4))(lats, lngs)
 
   /** All cells of the extent — the grid side of the negative anti-join
     * (J6). Relational form: sequence×sequence explode, no driver loop. */
@@ -79,22 +70,13 @@ object GeoUdfs {
       .select(GeoF.packCell(ext.z, col("tx"), col("ty")).as("cell_id"))
   }
 
-  /** Square-viewport cover cells (J3; square quirk preserved) + in-mosaic
-    * point offset struct<rx,ry> (python round = half-even). */
+  /** Square-viewport cover cells (J3; square quirk preserved). */
   def viewportCells(z: Int, h: Int, offX: Double = 0, offY: Double = 0)(lat: Column, lng: Column): Column = {
     val f = udf { (la: Double, ln: Double) =>
       val (txmin, txmax, tymin, tymax, _, _) = Viewport.tilesNearWgs(la, ln, z, h, h, offX, offY)
       (for (ty <- tymin to tymax; tx <- txmin to txmax) yield CellId.pack(z, tx, ty)).toArray
     }
     f(lat, lng)
-  }
-
-  def viewportOffset(z: Int, h: Int, offX: Double = 0, offY: Double = 0)(lat: Column, lng: Column): Column = {
-    val f = udf { (la: Double, ln: Double) =>
-      val (_, _, _, _, rx, ry) = Viewport.tilesNearWgs(la, ln, z, h, h, offX, offY)
-      (rx, ry)
-    }
-    f(lat, lng).cast("struct<rx:bigint,ry:bigint>")
   }
 
   /** Way cover with padding + %256 wrap (J5/P11): returns
@@ -106,14 +88,6 @@ object GeoUdfs {
     }
     f(lats, lngs).cast(
       "struct<txmin:bigint,txmax:bigint,tymin:bigint,tymax:bigint,xmin:bigint,ymin:bigint,xmax:bigint,ymax:bigint>")
-  }
-
-  /** image_id string of a cell — reference tile path scheme. */
-  val cellImageId: Column => Column = {
-    val f = udf { (cell: Long) =>
-      s"z${CellId.z(cell)}/x${CellId.tx(cell)}y${CellId.ty(cell)}"
-    }
-    c => f(c)
   }
 
   /** P9: iD-editor link at a tile's center (reference lib/helpers.py:16-19
@@ -194,11 +168,6 @@ object ImageUdfs {
       n += 1; i += 3
     }
     (n, s, ss, mn, mx)
-  }
-
-  val psnrUdf = udf { (a: Array[Byte], b: Array[Byte]) =>
-    val ra = decode(a); val rb = decode(b)
-    if (ra.h != rb.h || ra.w != rb.w) -1.0 else psnr(ra, rb)
   }
 
   val meanColorUdf = udf { (bytes: Array[Byte]) =>

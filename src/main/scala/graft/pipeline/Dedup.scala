@@ -399,13 +399,14 @@ object Dedup {
     * (every pair must link a node to its own-star minimum) — a hash
     * collision or round-budget overrun fails loudly, never mislabels.
     *
-    * Two physical paths, one contract: below `graft.ccLocalMaxEdges`
-    * (default 10^6) canonical edges, the graph collects to the driver and
+    * Two physical paths, one contract: up to `localMaxEdges` (default
+    * 10^6) canonical edges, the graph collects to the driver and
     * a union-find produces the identical decisions ~10x faster than the
     * distributed rounds' fixed scheduling cost (dedup graphs are sparse —
     * a million candidate PAIRS is a large corpus's worth); above it, the
-    * star rounds run. DedupResolveSpec pins path equality bit-for-bit. */
-  def resolveClusters(pairs: DataFrame): DataFrame = {
+    * star rounds run. DedupResolveSpec pins path equality bit-for-bit;
+    * `localMaxEdges = 0` forces the distributed path. */
+  def resolveClusters(pairs: DataFrame, localMaxEdges: Long = 1000000L): DataFrame = {
     // materialize the INPUT once: the candidate-pair lineage feeding this
     // operator is typically the expensive half (banding + verification),
     // and both the node set and the canonical edge set derive from it —
@@ -434,23 +435,22 @@ object Dedup {
     // star-rounds on random graphs); the star rounds below remain the
     // at-scale path and are what a super-threshold graph runs. 10^6 edges
     // ~= 16 MB driver memory — the same bounded-collect class as the PQ
-    // codebooks. -Dgraft.ccLocalMaxEdges=0 forces the distributed path.
-    val localMax = math.min(
-      sys.props.getOrElse("graft.ccLocalMaxEdges", "1000000").toLong,
-      (Int.MaxValue / 4).toLong)
+    // codebooks.
+    val localMax = math.min(localMaxEdges, (Int.MaxValue / 4).toLong)
     if (localMax > 0 && pairs.schema.fields.forall(
           _.dataType == org.apache.spark.sql.types.LongType)) {
       val edgeCount = p.count()
       if (edgeCount <= localMax) {
         val edges = p.collect().map(r => (r.getLong(0), r.getLong(1)))
-        // node set = edge endpoints (≤ 2·edgeCount, already bounded) ∪
-        // ids appearing only in SELF-pairs (their own limit guard)
+        // node set = edge endpoints ∪ ids appearing only in SELF-pairs; the
+        // COMBINED set is capped at 2·localMax (endpoints alone can reach
+        // it, so at most 2·localMax + 1 self ids are ever collected)
         val selfIds = pr.where(col("ida") === col("idb"))
           .select(col("ida")).distinct().limit(2 * localMax.toInt + 1).collect()
-        if (selfIds.length <= 2 * localMax) { // self-pair flood guard
-          val ids = new java.util.LinkedHashSet[java.lang.Long]()
-          edges.foreach { case (a, b) => ids.add(a); ids.add(b) }
-          selfIds.foreach(r => ids.add(r.getLong(0)))
+        val ids = new java.util.LinkedHashSet[java.lang.Long]()
+        edges.foreach { case (a, b) => ids.add(a); ids.add(b) }
+        selfIds.foreach(r => ids.add(r.getLong(0)))
+        if (ids.size <= 2 * localMax) {
           val idArr = new Array[Long](ids.size)
           val it = ids.iterator()
           var i = 0

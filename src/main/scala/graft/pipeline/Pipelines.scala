@@ -130,26 +130,6 @@ object Pipelines {
       .repartition(col("cell_id"))
   }
 
-  /** Cover-path form of [[negativeCells]]: the painted exclusion set is
-    * COMPACTED to mixed zoom [zMin, cfg.z] and candidates probe it through
-    * the bounded ancestor-chain [[CellOps.coverJoin]] (anti form) —
-    * identical output by compact's losslessness (PolyfillSpec pins it on
-    * the buildings exclusion zones), but the broadcast side is the
-    * compacted cover: for area-shaped exclusions (WKT fills,
-    * make_buildings.py:24-27) that is orders of magnitude smaller than
-    * the fine painted set, which is what keeps the anti-join broadcastable
-    * at planet-scale exclusion zones. */
-  def negativeCellsViaCover(spark: SparkSession, painted: DataFrame, cfg: Config,
-                            n: Int, seedTag: Long, zMin: Int): DataFrame = {
-    val cover = CellOps.compact(painted.select(col("cell_id")), cfg.z, zMin)
-    val grid = GeoUdfs.gridCells(spark, cfg.ext)
-    val free = grid.join(
-      CellOps.coverJoin(grid, cover, cfg.z, zMin).select(col("cell_id")),
-      Seq("cell_id"), "left_anti")
-    HashRank.sample(free, "cell_id", cfg.seed + seedTag, n)
-      .repartition(col("cell_id"))
-  }
-
   private def exampleIdAtCell: Column =
     format_string("m_x%dy%d", GeoF.cellTx(col("cell_id")), GeoF.cellTy(col("cell_id")))
 
@@ -158,20 +138,6 @@ object Pipelines {
     * tilefile x{tx}y{ty}); only negatives get the m_ prefix (:69). */
   private def exampleIdAtCellBare: Column =
     format_string("x%dy%d", GeoF.cellTx(col("cell_id")), GeoF.cellTy(col("cell_id")))
-
-  /** Co-partitioning strategy before a stitch aggregation. Default: hash
-    * `repartition(key)`. `-Dgraft.stitchPartition=range` switches to
-    * `repartitionByRange(key)` — nearby keys (mil-keyed points, way ids)
-    * land in the same task, the north_star's "per-cell range partitioning"
-    * for stitch locality. Results are key-grouped aggregates either way,
-    * so output is partitioning-invariant; the A/B on the bench world is
-    * recorded in BENCH/BASELINE.md (hash kept as default: range adds a
-    * boundary-sampling job and measured no win at bench scale). */
-  def copartitionForStitch(df: DataFrame, key: Column): DataFrame =
-    if (sys.props.get("graft.stitchPartition")
-        .orElse(sys.env.get("GRAFT_STITCH_PARTITION")).contains("range"))
-      df.repartitionByRange(key)
-    else df.repartition(key)
 
   /** Exact global top-`n` membership by (rank, key) WITHOUT a global
     * row_number window (which forces all rows into one partition —
@@ -249,11 +215,12 @@ object Pipelines {
     // aggregation would otherwise allocate a full canvas per group per
     // map task and shuffle ~|mapTasks|x inflated partial canvases
     // (measured: executor OOM at 8 GB in the local-cluster study; raw
-    // tile rows are ~8x smaller than their partial mosaics)
-    val copart = copartitionForStitch(joined, col("key"))
+    // tile rows are ~8x smaller than their partial mosaics). Hash, not
+    // range: the range A/B in BENCH/BASELINE.md added a boundary-sampling
+    // job and measured no win.
     // I2 via TypedImperativeAggregate: tiles decode+blit into the mosaic
     // buffer as they arrive (no collect_list materialization)
-    copart.groupBy(col("key"))
+    joined.repartition(col("key")).groupBy(col("key"))
       .agg(first(col("rx")).as("rx"), first(col("ry")).as("ry"),
         graft.functions.Stitch.stitchAgg(struct(col("dx").cast("int"), col("dy").cast("int"),
           col("wtiles").cast("int"), col("htiles").cast("int"), col("bytes"))).as("mosaic"))
@@ -473,7 +440,7 @@ object Pipelines {
     // arrive — never a collect_list of encoded image bytes; co-partition by
     // way BEFORE the stitch agg (see cropAroundPoints: partial canvases are
     // larger than the raw tiles they aggregate)
-    copartitionForStitch(slots, col("way_id")).groupBy(col("way_id"))
+    slots.repartition(col("way_id")).groupBy(col("way_id"))
       .agg(first(col("label")).as("label"),
         first(col("xmin")).as("xmin"), first(col("ymin")).as("ymin"),
         first(col("xmax")).as("xmax"), first(col("ymax")).as("ymax"),

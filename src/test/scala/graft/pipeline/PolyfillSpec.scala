@@ -1,14 +1,11 @@
 package graft.pipeline
 
 import graft.SparkSuite
-import graft.core.{CellId, Mercator, Wkt}
-import graft.tables.SyntheticWorld
-import org.apache.spark.sql.functions._
+import graft.core.{CellId, Mercator}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Polyfill (polygon -> compacted cover) contracts: the cover equals a
-  * sequential center-in-polygon fill, and the buildings pipeline's
-  * exclusion negatives are identical through the cover path. */
+/** Polyfill (polygon -> compacted cover) contract: the cover equals a
+  * sequential center-in-polygon fill. */
 class PolyfillSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
@@ -85,40 +82,5 @@ class PolyfillSpec extends AnyFunSuite {
       val expanded = CellOps.uncompact(cover, zMax).as[Long].collect().toSet
       assert(expanded == expected, s"seed $seed: polyfill vs sequential fill")
     }
-  }
-
-  test("buildings exclusion negatives are identical through the compacted-cover path") {
-    val w = SyntheticWorld.testWorld
-    val nodes = SyntheticWorld.osmNodes(spark, w)
-    val ways = SyntheticWorld.osmWays(spark, w)
-    val (bw, bs, be, bn) = w.bbox
-    val cfg = Pipelines.Config(z = w.z, bbox = (bw, bs, be, bn),
-      limit = 60, train = 40, valid = 20)
-    // the PipelineGoldenSpec exclusion polygon (a grid block)
-    val (xlat0, xlng0) = SyntheticWorld.wgsAtPixel(w.z, w.tx0 + 2, w.ty0 + 2, 0, 0)
-    val (xlat1, xlng1) = SyntheticWorld.wgsAtPixel(w.z, w.tx0 + 6, w.ty0 + 6, 255, 255)
-    val wkt = s"POLYGON (($xlng0 $xlat0, $xlng1 $xlat0, $xlng1 $xlat1, $xlng0 $xlat1, $xlng0 $xlat0))"
-
-    // painted = building outlines ∪ exclusion fill, exactly as the
-    // buildings pipeline builds it (Pipelines.scala buildings())
-    val buildingWays = Pipelines.waysPacked(ways, nodes, col("tags").getItem("building").isNotNull)
-    val outline = buildingWays.select(
-      explode(graft.functions.GeoUdfs.rasterizePolyline(cfg.ext, 1)($"lats", $"lngs")).as("cell_id"))
-    val polys = Wkt.latlngsFromWkt(wkt).toSeq.map { case (la, ln) => (la.toSeq, ln.toSeq) }
-    val fill = polys.toDF("lats", "lngs")
-      .select(explode(graft.functions.GeoUdfs.rasterizeFill(cfg.ext)($"lats", $"lngs")).as("cell_id"))
-    val painted = outline.unionByName(fill).distinct().cache()
-
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select($"cell_id").as[Long].collect().sorted.toSeq
-    val plain = ids(Pipelines.negativeCells(spark, painted, cfg, cfg.limit, seedTag = 4))
-    val viaCover = ids(Pipelines.negativeCellsViaCover(spark, painted, cfg,
-      cfg.limit, seedTag = 4, zMin = w.z - 4))
-    assert(viaCover == plain,
-      "cover-path negatives must be row-identical to the fine-set anti-join")
-    // and the cover really is the compressed form of the same area
-    val cover = CellOps.compact(painted.select($"cell_id"), cfg.z, w.z - 4)
-    assert(cover.count() < painted.select($"cell_id").distinct().count(),
-      "area-shaped exclusions must compact smaller")
   }
 }

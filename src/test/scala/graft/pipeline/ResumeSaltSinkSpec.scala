@@ -137,29 +137,25 @@ class ResumeSaltSinkSpec extends AnyFunSuite {
     assert(Files.getLastModifiedTime(runner.manifestPath("lamps_ranked")) == lampStamp)
   }
 
-  test("legacy unversioned data dir survives migration as the rollback target") {
-    // a baseDir written before snapshot versioning: `data` dir + a manifest
-    // the current schema cannot parse. The first versioned commit must NOT
-    // delete the only pre-migration copy — it is the de-facto previous
-    // snapshot; it drops only once keepSnapshots committed versions exist.
-    val dir = Files.createTempDirectory("graft_legacy").toString
-    val legacyData = Paths.get(s"$dir/lg/data")
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(legacyData.toString)
-    Files.write(Paths.get(s"$dir/lg/manifest.json"),
-      "{not json at all".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-    val runner = new StageRunner(spark, dir) // keepSnapshots = 2
-    runner.stage("lg")(Seq((3L, "c")).toDF("id", "v"))
-    assert(runner.snapshotId("lg").contains(1L))
-    assert(Files.isDirectory(legacyData),
-      "first versioned commit must retain the pre-migration copy")
-    assert(spark.read.parquet(legacyData.toString).count() == 2, "legacy rows intact")
-
-    runner.invalidate("lg")
-    runner.stage("lg")(Seq((4L, "d")).toDF("id", "v"))
-    assert(runner.snapshotId("lg").contains(2L))
-    assert(!Files.isDirectory(legacyData),
-      "once keepSnapshots committed versions exist the legacy dir drops")
+  test("a manifest without data_dir or schema_json reads as uncommitted; the stage recomputes") {
+    val dir = Files.createTempDirectory("graft_unreadable").toString
+    val runner = new StageRunner(spark, dir)
+    var runs = 0
+    def compute = { runs += 1; Seq((runs.toLong, "v")).toDF("id", "v") }
+    runner.stage("s")(compute)
+    runner.stage("s")(compute)
+    assert(runs == 1, "an intact manifest is served, not recomputed")
+    val mapper = graft.tables.ManifestJson.mapper
+    for ((field, i) <- Seq("data_dir", "schema_json").zipWithIndex) {
+      val m = mapper.readTree(Files.readAllBytes(runner.manifestPath("s")))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      m.remove(field)
+      Files.write(runner.manifestPath("s"), mapper.writeValueAsBytes(m))
+      assert(runner.manifestObj("s").isEmpty, s"a manifest without $field is not committed")
+      val out = runner.stage("s")(compute).as[(Long, String)].collect().toSeq
+      assert(runs == i + 2 && out == Seq((runs.toLong, "v")), s"missing $field recomputes")
+      assert(runner.manifestObj("s").exists(_.snapshot_id == i + 2L))
+    }
   }
 
   test("salted hot-cell join == plain join, row for row") {
