@@ -55,11 +55,6 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** True when running under the correctness gate (Verify sets this): dedup
-    * signatures use the md5-portable hashes that the DuckDB twins replay.
-    * Default (bench/production) is the xxhash64 fast path. */
-  private def oracleHashing: Boolean = sys.props.contains("graft.oracleHashing")
-
   /** Run `body` with `spark.sql.shuffle.partitions` set to the STREAMING
     * state-partition count, restoring the batch value after. Stateful
     * streaming operators keep one state store instance per shuffle
@@ -183,47 +178,45 @@ object SparkEntry {
     * grams, distinct mins. Guarantee: any shared substring of >= k+w-1 = 8
     * chars yields a shared fingerprint; ~1/w of positions survive — a
     * position-robust 4x sketch. Shared by q_text_winnow and the
-    * contamination audit. Same dual-path rule as MinHash: md5-portable
-    * h60 under the oracle gate, xxhash64 in production (the winnowing
-    * guarantee holds for ANY gram hash; md5 per position is the minhash
-    * 9.4s lesson). Per-row explode + one per-doc window. */
+    * contamination audit. Gram hash = xxhash64 (the winnowing guarantee
+    * holds for ANY gram hash; md5 per position is the minhash 9.4s
+    * lesson). Per-row kernel, zero shuffle. */
   private def winnowFps(s: SparkSession, dir: String): DataFrame = {
     // ZERO-SHUFFLE form (r6, guide §2.4): the window min over 4
     // consecutive gram hashes and the per-doc distinct are both
-    // WITHIN-ROW operations once the gram hashes live in an array —
-    // array_min(slice(hs, p, 4)) replaces the per-doc window (which cost
-    // an exchange + sort on doc_id) and array_distinct replaces the
-    // global distinct (fp sets never span docs; (doc_id, fp) distinct ==
-    // per-row array_distinct). Same math, same rows (oracle-checked:
-    // q_text_winnow / q_text_contamination twins are unchanged).
-    // Eligible positions are p in [1, len-8] (the twin's p <= len-8
-    // cutoff) over the len-4 gram hashes; docs with len <= 8 have no
-    // eligible position. The kernel is a per-row UDF for the same reason
-    // as Dedup's minhash signature kernel: the SQL-expression form pays
-    // an O(len) UTF8 character scan PER substring(text, i, 5) call
-    // (O(len²) per doc) plus a per-gram string allocation, while the
-    // kernel walks the text once per gram from a char index.
+    // WITHIN-ROW operations once the gram hashes live in an array — the
+    // kernel takes each window's min in a loop (no per-doc window, which
+    // cost an exchange + sort on doc_id) and keeps first-occurrence
+    // distinct mins (fp sets never span docs, so no global distinct).
+    // Eligible positions are 0-based p <= len-8 (the twin's cutoff) over
+    // the len-4 gram hashes, len in code points. The kernel is a per-row
+    // UDF for the same reason as Dedup's minhash signature kernel: the
+    // SQL-expression form pays an O(len) UTF8 character scan PER
+    // substring(text, i, 5) call (O(len²) per doc) plus a per-gram string
+    // allocation, while the kernel walks the text once.
     wide(s, t(s, dir, "documents").where(length(col("text")) >= 8))
-      .select(col("doc_id"), explode(winnowUdf(oracleHashing)(col("text"))).as("fp"))
+      .select(col("doc_id"), explode(winnowUdf(col("text"))).as("fp"))
   }
 
-  /** Per-row winnowing kernel: gram hashes (h60 under the oracle gate,
-    * xxhash64 seed 42 — identical to the Column xxhash64 — in
-    * production), min over each 4-gram window at positions p <=
-    * len - 8, first-occurrence-distinct — the whole fingerprint SET of
-    * a doc in one pass, zero shuffle, zero per-gram UTF8String. */
-  private def winnowUdf(portable: Boolean) = udf { (text: String) =>
-    val len = text.length
+  /** Per-row winnowing kernel: gram hashes (xxhash64 seed 42 — identical
+    * to the Column xxhash64), min over each 4-gram window at positions
+    * p <= len - 8, first-occurrence-distinct — the whole fingerprint SET
+    * of a doc in one pass, zero shuffle, zero per-gram UTF8String. Grams
+    * and len count code points, as Spark's substring/length and the twin
+    * do (a UTF-16 index would split surrogate pairs). */
+  private val winnowUdf = udf { (text: String) =>
+    val len = text.codePointCount(0, text.length)
     if (len < 8) Array.empty[Long] else {
       val nG = len - 4
       val hs = new Array[Long](nG)
       var i = 0
+      var at = 0 // char index of gram i
       while (i < nG) {
-        val gb = text.substring(i, i + 5)
+        val gb = text.substring(at, text.offsetByCodePoints(at, 5))
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        hs(i) = if (portable) pipeline.Dedup.md5h60FromBytes(gb)
-          else org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            gb, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, gb.length, 42L)
+        hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+          gb, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, gb.length, 42L)
+        at = text.offsetByCodePoints(at, 1)
         i += 1
       }
       val seen = new java.util.LinkedHashSet[java.lang.Long]()
@@ -311,9 +304,8 @@ object SparkEntry {
       () => { // the committed BASE sketch of q_sketch_refresh (the monitor
         // state a corpus refresh merges into)
         val baseDocs = t(s, dir, "documents").where(col("doc_id") % 2 === 0)
-        pipeline.TextStages.runnerFor(baseDocs).stage(cmsStageName)(
-          pipeline.Sketches.cmsBuild(shinglesOf(baseDocs), col("g"), d = 4, w = 256,
-            portableHashing = oracleHashing))
+        pipeline.TextStages.runnerFor(baseDocs).stage(CmsStageName)(
+          pipeline.Sketches.cmsBuild(shinglesOf(baseDocs), col("g"), d = 4, w = 256))
         ()
       })
     val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size)
@@ -345,12 +337,9 @@ object SparkEntry {
     }
   }
 
-  /** The committed base-CMS stage is keyed by the active hash path —
-    * a fast-path (xxhash64) snapshot must never be served to the oracle
-    * gate's md5 run or vice versa (same corpus fingerprint, different
-    * counters). */
-  private def cmsStageName: String =
-    "cms-sh5-d4w256-" + (if (oracleHashing) "md5" else "xx")
+  /** The committed base-CMS stage (the "-xx" suffix names its xxhash64
+    * counters; snapshots committed under this name stay servable). */
+  private val CmsStageName = "cms-sh5-d4w256-xx"
 
   /** Scan-width normalization for CPU-dense per-row kernels (shingle
     * explodes, hash signatures, md5 chains): the sf dirs ship ONE small
@@ -369,7 +358,7 @@ object SparkEntry {
 
   /** 5-char shingle stream shared by the sketch queries. */
   private def shinglesOf(docs: DataFrame): DataFrame =
-    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    wide(docs.sparkSession, docs)
       .where(length(col("text")) >= 5).select(col("source"), explode(expr(
       "transform(sequence(1, length(text) - 4), i -> substring(text, i, 5))")).as("g"))
 
@@ -1341,17 +1330,12 @@ object SparkEntry {
         .where(col("jac_fp") >= 500000)
     }),
 
-    // MinHash-LSH near-dup candidates (60-bit permutation hashes, 16
-    // perms, 4 bands) verified by exact Jaccard. Two hash families behind
-    // one structure: the ORACLE run (Verify sets -Dgraft.oracleHashing)
-    // uses md5-derived hashes whose full signature/banding/verification
-    // chain has an exact DuckDB twin; the default (bench/production) run
-    // uses xxhash64 signatures — same banding, ~10x cheaper per shingle
-    // (the md5 pass was the slowest r2 batch query). MinhashParitySpec
-    // pins the two paths against each other on planted dup clusters.
+    // MinHash-LSH near-dup candidates (xxhash64 permutation hashes, 16
+    // perms, 4 bands) verified by exact Jaccard; the DuckDB twin replays
+    // the whole signature/banding/verification chain.
     "q_dedup_minhash" -> ((s, dir) =>
       pipeline.Dedup.minhashPairs(wide(s, t(s, dir, "documents")), shingleLen = 5,
-          numPerm = 16, bands = 4, portableHashing = oracleHashing)
+          numPerm = 16, bands = 4)
         .select(col("ida"), col("idb"), col("jac_fp"))),
 
     // k-hop neighborhood audit over the near-dup graph — the diagnostic a
@@ -1389,11 +1373,11 @@ object SparkEntry {
     // components -> keep-min-per-component (the actual "which rows to
     // keep" deliverable; exact dedup's keep-min rule generalized to the
     // near-dup graph). Oracle: DuckDB recursive-CTE transitive closure
-    // over the same md5 pair chain.
+    // over the same minhash pair chain.
     "q_dedup_resolve" -> ((s, dir) =>
       pipeline.Dedup.resolveClusters(
         pipeline.Dedup.minhashPairs(wide(s, t(s, dir, "documents")), shingleLen = 5,
-            numPerm = 16, bands = 4, portableHashing = oracleHashing)
+            numPerm = 16, bands = 4)
           .where(col("jac_fp") >= 600000))),
 
     // SimHash 60-bit near-dup pairs via 15-bit chunk banding (guaranteed
@@ -1823,11 +1807,9 @@ object SparkEntry {
         .select(explode(expr(
           "transform(sequence(1, length(text) - 4), i -> substring(text, i, 5))")).as("g"))
         .localCheckpoint(false)
-      val sketch = pipeline.Sketches.cmsBuild(sh, col("g"), d = 4, w = 256,
-        portableHashing = oracleHashing)
+      val sketch = pipeline.Sketches.cmsBuild(sh, col("g"), d = 4, w = 256)
       val exact = sh.groupBy(col("g")).agg(count(lit(1)).as("exact"))
-      pipeline.Sketches.cmsEstimate(sketch, sh.distinct(), col("g"), d = 4, w = 256,
-        portableHashing = oracleHashing)
+      pipeline.Sketches.cmsEstimate(sketch, sh.distinct(), col("g"), d = 4, w = 256)
         .join(exact, col("k") === col("g"))
         .select(col("k"), col("est"), col("exact"))
     }),
@@ -1837,7 +1819,7 @@ object SparkEntry {
     // (broadcast? salt? partition count?) from KB-sized tables, never
     // touching the raw relations: est = min_r Σ_cl cA·cB >= the exact
     // join size (DuckDB-checked beside it). Purchases x clicks on
-    // user_id; d=4, w=256, md5-portable under the oracle gate.
+    // user_id; d=4, w=256.
     "q_sketch_joinsize" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       // each side feeds its sketch AND the exact join-size evidence —
@@ -1846,10 +1828,8 @@ object SparkEntry {
         .select(col("user_id").cast("string").as("g")).localCheckpoint(false)
       val b = ev.where(col("event_type") === "click")
         .select(col("user_id").cast("string").as("g")).localCheckpoint(false)
-      val sa = pipeline.Sketches.cmsBuild(a, col("g"), d = 4, w = 256,
-        portableHashing = oracleHashing)
-      val sb = pipeline.Sketches.cmsBuild(b, col("g"), d = 4, w = 256,
-        portableHashing = oracleHashing)
+      val sa = pipeline.Sketches.cmsBuild(a, col("g"), d = 4, w = 256)
+      val sb = pipeline.Sketches.cmsBuild(b, col("g"), d = 4, w = 256)
       val exact = a.groupBy(col("g")).agg(count(lit(1)).as("na"))
         .join(b.groupBy(col("g")).agg(count(lit(1)).as("nb")), "g")
         .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("joinsize_exact"))
@@ -1870,8 +1850,7 @@ object SparkEntry {
         .select(col("source"), explode(expr(
           "transform(sequence(1, length(text) - 4), i -> substring(text, i, 5))")).as("g"))
         .localCheckpoint(false)
-      val regs = pipeline.Sketches.hllRegisters(sh, col("source"), col("g"),
-        portableHashing = oracleHashing)
+      val regs = pipeline.Sketches.hllRegisters(sh, col("source"), col("g"))
       pipeline.Sketches.hllEstimate(regs)
         .join(sh.groupBy(col("source")).agg(countDistinct(col("g")).as("exact")),
           col("grp") === col("source"))
@@ -1887,8 +1866,7 @@ object SparkEntry {
         .select(col("source"), explode(expr(
           "transform(sequence(1, length(text) - 4), i -> substring(text, i, 5))")).as("g"))
       pipeline.Sketches.kmvEstimate(
-        pipeline.Sketches.kmvSketch(sh, col("source"), col("g"), k = 32,
-          portableHashing = oracleHashing), k = 32)
+        pipeline.Sketches.kmvSketch(sh, col("source"), col("g"), k = 32), k = 32)
     }),
 
     // theta-sketch distinct INTERSECTION between source pairs from their
@@ -1904,8 +1882,7 @@ object SparkEntry {
         .select(col("source"), explode(expr(
           "transform(sequence(1, length(text) - 4), i -> substring(text, i, 5))")).as("g"))
         .localCheckpoint(false)
-      val sk = pipeline.Sketches.kmvSketch(sh, col("source"), col("g"), k = 32,
-        portableHashing = oracleHashing)
+      val sk = pipeline.Sketches.kmvSketch(sh, col("source"), col("g"), k = 32)
         .localCheckpoint(false) // tiny: <= k rows per source
       val pairs = Seq(("src0", "src1"), ("src0", "src2"), ("src1", "src2"))
       val pdf = s.range(0, 3).select(
@@ -2097,12 +2074,10 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val base = docs.where(col("doc_id") % 2 === 0)
       val delta = docs.where(col("doc_id") % 2 =!= 0)
-      val committed = pipeline.TextStages.runnerFor(base).stage(cmsStageName)(
-        pipeline.Sketches.cmsBuild(shinglesOf(base), col("g"), d = 4, w = 256,
-          portableHashing = oracleHashing))
+      val committed = pipeline.TextStages.runnerFor(base).stage(CmsStageName)(
+        pipeline.Sketches.cmsBuild(shinglesOf(base), col("g"), d = 4, w = 256))
       committed.unionByName(
-          pipeline.Sketches.cmsBuild(shinglesOf(delta), col("g"), d = 4, w = 256,
-            portableHashing = oracleHashing))
+          pipeline.Sketches.cmsBuild(shinglesOf(delta), col("g"), d = 4, w = 256))
         .groupBy(col("r"), col("cl")).agg(sum(col("c")).as("c"))
     }),
 
@@ -2152,24 +2127,60 @@ object SparkEntry {
   // DuckDB oracles — same tables, same math, ANSI SQL
   // =====================================================================
 
-  /** Shared CTE chain of the md5 MinHash twin (shingles -> 16-perm
-    * signatures -> 4-band keys -> candidate pairs -> exact-Jaccard
-    * verification as `vpairs`) — used by q_dedup_minhash and
-    * q_dedup_resolve. */
+  /** Twin of the CMS cell hashes: (g, r, h) for each distinct `g` of
+    * `src` and hash row r in 0 until 4. */
+  private def cmsKeyHashSql(src: String): String =
+    pipeline.Sketches.keyHashSql(src, "g", (0 until 4).map(r => s"cms$r|"))
+
+  /** Shared CTE chain of the KMV twins: source shingles `sh` -> distinct
+    * (grp, kmv key hash) -> per-source bottom-32 sketch `sk`. */
+  private val kmvCtes: String =
+    s"""sh AS MATERIALIZED (
+           SELECT source, substring(text, i::INT, 5) AS g
+           FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
+           WHERE length(text) >= 5),
+         hs AS (
+           SELECT DISTINCT source AS grp, h
+           FROM sh JOIN (${pipeline.Sketches.keyHashSql("sh", "g", Seq("kmv|"))}) USING (g)),
+         rk AS (
+           SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rk
+           FROM hs),
+         sk AS (SELECT grp, h FROM rk WHERE rk <= 32)"""
+
+  /** Shared CTE chain of the winnowing twin (5-gram xxhash64 seed 42, hashed
+    * once per distinct gram -> 4-gram window min -> distinct `fps`). */
+  private val winnowCtes: String =
+    s"""grams AS MATERIALIZED (
+           SELECT doc_id, length(text) AS len, i - 1 AS p,
+             substring(text, CAST(i AS INTEGER), 5) AS g
+           FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
+           WHERE length(text) >= 5),
+         gh AS (${pipeline.XxhashSql.xxh64Sql("(SELECT DISTINCT g FROM grams)", "g", "42", "h")}),
+         wins AS (
+           SELECT doc_id, p, len,
+             min(h) OVER (PARTITION BY doc_id ORDER BY p
+               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
+           FROM grams JOIN gh USING (g)),
+         fps AS (SELECT DISTINCT doc_id, fp FROM wins WHERE p <= len - 8)"""
+
+  /** Shared CTE chain of the MinHash twin (shingles -> 16-perm xxhash64
+    * hashes, one row per distinct shingle -> per-doc signatures -> 4-band
+    * keys -> candidate pairs -> exact-Jaccard verification as `vpairs`) —
+    * used by q_dedup_minhash and q_dedup_resolve. `sh` and `vpairs` are
+    * MATERIALIZED: inlined, the recursive resolve re-ran the whole chain. */
   private val minhashCtes: String = {
-    val minAggs = (0 until 16).map(p =>
-      s"min(CAST('0x' || substr(md5(g || '|$p'), 1, 15) AS BIGINT)) AS h$p").mkString(",\n             ")
+    val permAggs = (0 until 16).map(p => s"min(h) FILTER (WHERE p = $p) AS h$p").mkString(", ")
+    val minAggs = (0 until 16).map(p => s"min(h$p) AS h$p").mkString(", ")
     val bandSelects = (0 until 4).map { b =>
       val cols = (b * 4 until (b + 1) * 4).map(p => s"h$p").mkString(", ")
       s"SELECT doc_id, $b AS band, concat_ws('_', $cols) AS bh FROM sig"
     }.mkString("\n           UNION ALL ")
-    s"""sh AS (
+    s"""sh AS MATERIALIZED (
            SELECT DISTINCT doc_id, substring(text, i, 5) AS g
            FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)),
-         sig AS (
-           SELECT doc_id,
-             $minAggs
-           FROM sh GROUP BY doc_id),
+         ph AS (SELECT g, $permAggs FROM (${pipeline.XxhashSql.xxh64Sql(
+           "(SELECT DISTINCT g FROM sh), range(0, 16) AS perm(p)", "g", "p", "h")}) GROUP BY g),
+         sig AS (SELECT doc_id, $minAggs FROM sh JOIN ph USING (g) GROUP BY doc_id),
          banded AS (
            $bandSelects),
          cand AS (
@@ -2182,7 +2193,7 @@ object SparkEntry {
            FROM cand c JOIN sh x ON x.doc_id = c.ida
                        JOIN sh y ON y.doc_id = c.idb AND y.g = x.g
            GROUP BY c.ida, c.idb),
-         vpairs AS (
+         vpairs AS MATERIALIZED (
            SELECT c.ida, c.idb,
              CAST(floor(coalesce(i.inter, 0) * 1000000.0 /
                (a.n + b.n - coalesce(i.inter, 0))) AS BIGINT) AS jac_fp
@@ -3567,36 +3578,15 @@ object SparkEntry {
          SELECT l_returnflag, 90 AS p, CAST(floor(l_quantity * 100) AS BIGINT) AS qty_c
          FROM r WHERE rn = ((n - 1) * 9) // 10 + 1""",
 
-    // exact SQL twin of the winnowing fingerprint: same 5-gram h60 hashes,
-    // same 4-gram window min, same full-window tail exclusion
-    "q_text_winnow" ->
-      """WITH grams AS (
-           SELECT doc_id, length(text) AS len, i - 1 AS p,
-             CAST('0x' || substr(md5(substring(text, CAST(i AS INTEGER), 5)), 1, 15) AS BIGINT) AS h
-           FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
-           WHERE length(text) >= 5),
-         wins AS (
-           SELECT doc_id, p, len,
-             min(h) OVER (PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-           FROM grams)
-         SELECT DISTINCT doc_id, fp FROM wins WHERE p <= len - 8""",
+    // exact SQL twin of the winnowing fingerprint: same 5-gram xxhash64
+    // hashes, same 4-gram window min, same full-window tail exclusion
+    "q_text_winnow" -> s"""WITH $winnowCtes SELECT doc_id, fp FROM fps""",
 
     // exact SQL twin of the contamination audit: same winnowing
-    // fingerprints (md5 h60 path), fp equi-join vs the % 97 benchmark
-    // subset, per-doc hit rollup
+    // fingerprints, fp equi-join vs the % 97 benchmark subset, per-doc
+    // hit rollup
     "q_text_contamination" ->
-      """WITH grams AS (
-           SELECT doc_id, length(text) AS len, i - 1 AS p,
-             CAST('0x' || substr(md5(substring(text, CAST(i AS INTEGER), 5)), 1, 15) AS BIGINT) AS h
-           FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
-           WHERE length(text) >= 5),
-         wins AS (
-           SELECT doc_id, p, len,
-             min(h) OVER (PARTITION BY doc_id ORDER BY p
-               ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-           FROM grams),
-         fps AS (SELECT DISTINCT doc_id, fp FROM wins WHERE p <= len - 8),
+      s"""WITH $winnowCtes,
          bench AS (SELECT fp, doc_id AS bench_id FROM fps WHERE doc_id % 97 = 0),
          hits AS (
            SELECT f.doc_id, f.fp, b.bench_id
@@ -4218,7 +4208,7 @@ object SparkEntry {
              sqrt(CAST(greatest(sum(a.vq * a.vq), 1) AS DOUBLE) *
                   CAST(greatest(sum(b.vq * b.vq), 1) AS DOUBLE))) AS BIGINT) >= 400000""",
 
-    // exact SQL twin of Dedup.minhashPairs (md5 oracle path): same 60-bit
+    // exact SQL twin of Dedup.minhashPairs: same xxhash64
     // permutation hashes, same '_'-joined band keys, same verification
     "q_dedup_minhash" ->
       s"""WITH $minhashCtes
@@ -4319,22 +4309,16 @@ object SparkEntry {
     },
 
     // CMS: every counter of the 4x256 sketch and every probe's min-cell
-    // estimate replayed (md5 cell hashes, integer counts throughout)
+    // estimate replayed (xxhash64 cell hashes per distinct shingle,
+    // integer counts throughout)
     "q_sketch_cms" ->
-      """WITH sh AS (
+      s"""WITH sh AS (
            SELECT substring(text, i::INT, 5) AS g
            FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
            WHERE length(text) >= 5),
-         cells AS (
-           SELECT r.range AS r,
-             CAST('0x' || substr(md5('cms' || CAST(r.range AS VARCHAR) || '|' || g), 1, 15) AS BIGINT) % 256 AS cl
-           FROM sh, range(0, 4) r),
-         sketch AS (SELECT r, cl, count(*) AS c FROM cells GROUP BY 1, 2),
-         probes AS (SELECT DISTINCT g FROM sh),
-         pcells AS (
-           SELECT g, r.range AS r,
-             CAST('0x' || substr(md5('cms' || CAST(r.range AS VARCHAR) || '|' || g), 1, 15) AS BIGINT) % 256 AS cl
-           FROM probes, range(0, 4) r),
+         pcells AS (SELECT g, r, h % 256 AS cl FROM (${cmsKeyHashSql("sh")})),
+         sketch AS (
+           SELECT r, cl, count(*) AS c FROM sh JOIN pcells USING (g) GROUP BY 1, 2),
          est AS (
            SELECT p.g, min(coalesce(s.c, 0)) AS est
            FROM pcells p LEFT JOIN sketch s ON s.r = p.r AND s.cl = p.cl
@@ -4346,22 +4330,16 @@ object SparkEntry {
     // twin of the CMS join-size estimate: both sketches replayed, row
     // inner products, min, exact Σ na·nb beside it
     "q_sketch_joinsize" ->
-      """WITH a AS (
+      s"""WITH a AS (
            SELECT CAST(user_id AS VARCHAR) AS g FROM events
            WHERE event_type = 'purchase'),
          b AS (
            SELECT CAST(user_id AS VARCHAR) AS g FROM events
            WHERE event_type = 'click'),
-         ca AS (
-           SELECT r.range AS r,
-             CAST('0x' || substr(md5('cms' || CAST(r.range AS VARCHAR) || '|' || g), 1, 15) AS BIGINT) % 256 AS cl
-           FROM a, range(0, 4) r),
-         sa2 AS (SELECT r, cl, count(*) AS c FROM ca GROUP BY 1, 2),
-         cb AS (
-           SELECT r.range AS r,
-             CAST('0x' || substr(md5('cms' || CAST(r.range AS VARCHAR) || '|' || g), 1, 15) AS BIGINT) % 256 AS cl
-           FROM b, range(0, 4) r),
-         sb2 AS (SELECT r, cl, count(*) AS c FROM cb GROUP BY 1, 2),
+         kh AS (SELECT g, r, h % 256 AS cl FROM (${cmsKeyHashSql(
+           "(SELECT g FROM a UNION SELECT g FROM b)")})),
+         sa2 AS (SELECT r, cl, count(*) AS c FROM a JOIN kh USING (g) GROUP BY 1, 2),
+         sb2 AS (SELECT r, cl, count(*) AS c FROM b JOIN kh USING (g) GROUP BY 1, 2),
          rws AS (SELECT DISTINCT r FROM sa2),
          ip AS (
            SELECT w.r, CAST(COALESCE(sum(s1.c * s2.c), 0) AS BIGINT) AS ip
@@ -4377,21 +4355,10 @@ object SparkEntry {
            (SELECT joinsize_exact FROM ex) AS joinsize_exact
          FROM ip""",
 
-    // KMV: distinct md5 hashes -> per-group bottom-32 window -> the
-    // shared estimate expression (exact below k, (k-1)*2^60/h_k beyond)
+    // KMV: distinct xxhash64 key hashes -> per-group bottom-32 window ->
+    // the shared estimate expression (exact below k, (k-1)*2^60/h_k beyond)
     "q_sketch_kmv" ->
-      ("""WITH sh AS (
-           SELECT source, substring(text, i::INT, 5) AS g
-           FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
-           WHERE length(text) >= 5),
-         hs AS (
-           SELECT DISTINCT source AS grp,
-             CAST('0x' || substr(md5('kmv|' || g), 1, 15) AS BIGINT) AS h
-           FROM sh),
-         rk AS (
-           SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rk
-           FROM hs),
-         sk AS (SELECT grp, h FROM rk WHERE rk <= 32),
+      (s"""WITH $kmvCtes,
          agg AS (
            SELECT grp, CAST(count(*) AS BIGINT) AS n, max(h) AS hk
            FROM sk GROUP BY 1)
@@ -4401,18 +4368,7 @@ object SparkEntry {
     // theta intersection: per-pair min threshold, common sketch hashes
     // below it, the shared scale-up — next to the exact overlap
     "q_sketch_theta" ->
-      """WITH sh AS (
-           SELECT source, substring(text, i::INT, 5) AS g
-           FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
-           WHERE length(text) >= 5),
-         hs AS (
-           SELECT DISTINCT source AS grp,
-             CAST('0x' || substr(md5('kmv|' || g), 1, 15) AS BIGINT) AS h
-           FROM sh),
-         rk AS (
-           SELECT grp, h, row_number() OVER (PARTITION BY grp ORDER BY h) AS rk
-           FROM hs),
-         sk AS (SELECT grp, h FROM rk WHERE rk <= 32),
+      s"""WITH $kmvCtes,
          th AS (
            SELECT grp, CASE WHEN count(*) < 32 THEN 1152921504606846976
              ELSE max(h) END AS theta
@@ -4491,15 +4447,12 @@ object SparkEntry {
     // sketch-refresh twin: the WHOLE-corpus counters directly — equality
     // with the Spark committed-base + delta merge is the linearity proof
     "q_sketch_refresh" ->
-      """WITH sh AS (
+      s"""WITH sh AS (
            SELECT substring(text, i::INT, 5) AS g
            FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
            WHERE length(text) >= 5),
-         cells AS (
-           SELECT r.range AS r,
-             CAST('0x' || substr(md5('cms' || CAST(r.range AS VARCHAR) || '|' || g), 1, 15) AS BIGINT) % 256 AS cl
-           FROM sh, range(0, 4) r)
-         SELECT r, cl, count(*) AS c FROM cells GROUP BY 1, 2""",
+         kh AS (${cmsKeyHashSql("sh")})
+         SELECT r, h % 256 AS cl, count(*) AS c FROM sh JOIN kh USING (g) GROUP BY 1, 2""",
 
     // histogram-quantile twin: identical binning, cumulative window, and
     // the integer den*cum >= num*n bound selection
@@ -4522,7 +4475,7 @@ object SparkEntry {
          SELECT p50.grp, p50.n, p50.p50_lb_c, p90.p90_lb_c
          FROM p50 JOIN p90 ON p90.grp = p50.grp""",
 
-    // HLL: registers (md5 hash, exact trailing-zero rho via the
+    // HLL: registers (xxhash64 key hash, exact trailing-zero rho via the
     // binary-string suffix), scaled-INTEGER harmonic denominator, and
     // the shared estimate expression — plus the exact distinct evidence
     "q_sketch_hll" ->
@@ -4531,8 +4484,8 @@ object SparkEntry {
            FROM documents, unnest(range(1, greatest(length(text) - 4, 0) + 1)) AS t(i)
            WHERE length(text) >= 5),
          hs AS (
-           SELECT source, CAST('0x' || substr(md5('hll|' || g), 1, 15) AS BIGINT) AS h
-           FROM sh),
+           SELECT source, h
+           FROM sh JOIN (${pipeline.Sketches.keyHashSql("sh", "g", Seq("hll|"))}) USING (g)),
          rr AS (SELECT source, h % 64 AS reg, h // 64 AS rest FROM hs),
          rho AS (
            SELECT source, reg,

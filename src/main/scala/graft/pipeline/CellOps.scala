@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
  * one equality per fine cell.
  *
  * All cell math is integer column arithmetic (codegen'd, no UDF), exact
- * and engine-portable — q_cell_compact replays every round in DuckDB.
+ * and engine-portable — q_cell_compact's DuckDB twin checks it.
  *
- * Scale shape: each round is ONE groupBy on the parent id over only the
- * cells still at the current finest level (strictly shrinking set), plus
- * a pass-through union; rounds are bounded by zMax - zMin <= 29. No
+ * Scale shape: [[compact]] is a closed form, not per-level rounds — one
+ * bounded per-row ancestor explode (<= zMax - zMin rows per cell) and ONE
+ * groupBy summing each ancestor's covered area decide which cells are
+ * complete, in a fixed number of jobs for any zoom span. No
  * driver-side data movement at any point.
  */
 object CellOps {

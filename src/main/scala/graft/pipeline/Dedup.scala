@@ -4,15 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Near-duplicate detection suite for training-data pipelines. All hashing
- * on the ORACLE path is md5-derived (engine-portable: Spark, DuckDB and the
- * Scala kernel produce bit-identical values), so every method here has an
- * exact ANSI-SQL twin and is value-checked by the DuckDB oracle. The
- * PRODUCTION path swaps the md5 permutation hashes for xxhash64 (the same
- * XXH64 kernel behind Spark's `xxhash64` function, ~10× cheaper per
- * shingle) — same signature/banding/verification structure, same
- * determinism, no SQL twin (DuckDB has no xxhash64); MinhashParitySpec pins
- * the two paths against each other on planted duplicate clusters.
+ * Near-duplicate detection suite for training-data pipelines. Every method
+ * here has an exact SQL twin and is value-checked by the DuckDB oracle:
+ * MinHash permutation hashes are xxhash64 (the XXH64 kernel behind Spark's
+ * `xxhash64` function, replayed in DuckDB by [[XxhashSql]]); SimHash
+ * tokens hash with the md5-derived [[h60]], which Spark, DuckDB and the
+ * Scala kernel compute bit-identically.
  *
  *  - exact: canonical-hash groupBy (see SparkEntry q_dedup_exact).
  *  - MinHash + LSH: shingle -> per-permutation min-hash signature -> band
@@ -85,42 +82,11 @@ object Dedup {
         array_distinct(expr(s"transform(sequence(1, length(text) - ${shingleLen - 1})," +
           s" i -> substring(text, i, $shingleLen))")).as("gs"))
 
-  /** Per-row minhash signature, md5 oracle path: out(p) = min over shingles
-    * of md5h60(g + "|" + p) — the kernel twin of h60(concat(g, '|p')).
-    * Hot loop: one UTF-8 encode per shingle, incremental digest updates
-    * per permutation (no per-(g,p) string concat). */
-  private def sigUdfMd5(numPerm: Int) = {
-    val suffixes = Array.tabulate(numPerm)(p =>
-      ("|" + p).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    udf { (gs: Seq[String]) =>
-      val md = digest.get()
-      val out = Array.fill(numPerm)(Long.MaxValue)
-      gs.foreach { g =>
-        val gb = g.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        var p = 0
-        while (p < numPerm) {
-          md.reset()
-          md.update(gb)
-          md.update(suffixes(p))
-          val d = md.digest()
-          var v = 0L
-          var i = 0
-          while (i < 7) { v = (v << 8) | (d(i) & 0xFFL); i += 1 }
-          val h = (v << 4) | ((d(7) & 0xFF) >>> 4)
-          if (h < out(p)) out(p) = h
-          p += 1
-        }
-      }
-      out
-    }
-  }
-
-  /** Per-row minhash signature, xxhash64 production path: out(p) = min over
-    * shingles of XXH64(g, seed = p) — one UTF-8 encode + numPerm 64-bit
-    * hash passes per shingle (no cryptographic digest in the hot loop).
-    * Same determinism and banding structure as the md5 path; ~10× cheaper
-    * per shingle (the md5 pass was the CPU wall of the r2 bench). */
-  private def sigUdfXx(numPerm: Int) =
+  /** Per-row minhash signature: out(p) = min over shingles of
+    * XXH64(g, seed = p) — one UTF-8 encode + numPerm 64-bit hash passes per
+    * shingle (no cryptographic digest in the hot loop; an md5 pass was the
+    * CPU wall of the r2 bench). */
+  private def sigUdf(numPerm: Int) =
     udf { (gs: Seq[String]) =>
       val out = Array.fill(numPerm)(Long.MaxValue)
       gs.foreach { g =>
@@ -140,18 +106,12 @@ object Dedup {
     * exact Jaccard similarity (fixed-point x1e6) — candidates only, so the
     * expensive verification is bounded by bucket collisions.
     *
-    * `portableHashing = true` selects the md5 permutation hashes (bit-exact
-    * DuckDB twin — the correctness-gate path); the default xxhash64 path is
-    * the production configuration (VERDICT r2 "What's wrong" #3: 16
-    * sequential md5 digests per shingle are ~10× the CPU of xxhash64 at
-    * 100 TB). Verification Jaccard is hash-independent either way.
-    *
     * Shuffle ledger: signatures are a per-row kernel loop over the shingle
     * array (zero shuffle), set sizes are per-row `size` (zero shuffle); the
     * only shuffles are the band-bucket self-join (one short row per
     * (doc, band)) and the candidate verification joins (candidates only). */
   def minhashPairs(docs: DataFrame, shingleLen: Int = 5, numPerm: Int = 16,
-                   bands: Int = 4, portableHashing: Boolean = false): DataFrame = {
+                   bands: Int = 4): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val rowsPerBand = numPerm / bands
     // shingling costs ~2s/5k docs and feeds three branches (signature,
@@ -159,13 +119,11 @@ object Dedup {
     // (not cache) so storage is auto-released, see class doc
     val withArr = shingleArr(docs, shingleLen).localCheckpoint(false)
 
-    // permutation p hash of shingle g = h60(g || "|p") (md5 path) or
-    // XXH64(g, seed=p) (production); signature = per-row kernel loop.
-    // A 16-way array_min(transform(md5..)) projection computes the same
-    // thing but its generated code takes ~25 s to Janino-compile — a UDF
-    // keeps codegen tiny and the hash in one thread-local loop.
-    val sigUdf = if (portableHashing) sigUdfMd5(numPerm) else sigUdfXx(numPerm)
-    val sig = withArr.select(col("doc_id"), sigUdf(col("gs")).as("hs"))
+    // permutation p hash of shingle g = XXH64(g, seed=p); signature = per-row
+    // kernel loop. A 16-way array_min(transform(..)) projection computes the
+    // same thing but its generated code takes ~25 s to Janino-compile — a UDF
+    // keeps codegen tiny and the hash in one loop.
+    val sig = withArr.select(col("doc_id"), sigUdf(numPerm)(col("gs")).as("hs"))
 
     // all band keys in one pass over sig; band key = '_'-joined slice
     val bandStructs = array((0 until bands).map { b =>

@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions._
  * fixed-size summary that merges across partitions/days (hot-key
  * detection feeding the salted-join path).
  *
- * All sketches are deterministic, and engine-portable under the oracle
- * gate: hashes follow the dual-path rule (md5-derived [[Dedup.h60]] when
- * `portableHashing` — the chain the DuckDB twins replay — else codegen'd
- * xxhash64, see [[keyHash]]), float estimate formulas are single shared
+ * All sketches are deterministic and engine-portable: keys hash with
+ * codegen'd xxhash64 (see [[keyHash]]), which the DuckDB twins replay
+ * through [[XxhashSql]]; float estimate formulas are single shared
  * expression strings evaluated identically by Spark and the twins, and
  * every cross-row reduction is an integer SUM/MAX/MIN (order-free) —
  * never a cross-engine double accumulation.
@@ -26,34 +25,36 @@ import org.apache.spark.sql.functions._
  */
 object Sketches {
 
-  /** 60-bit nonnegative keyed hash — the dual-path rule every sketch
-    * shares with MinHash/winnowing (the md5-per-row 9.4s lesson):
-    * `portable = true` (the Verify/oracle gate) takes the md5-derived
-    * h60 whose full chain the DuckDB twins replay; the default
-    * production path takes codegen'd xxhash64 (~10x cheaper per key),
-    * folded to the same nonneg 60-bit range so downstream register/
-    * threshold math is identical. Every sketch GUARANTEE (CMS
-    * one-sidedness, KMV exact-below-k, HLL error bound, mergeability)
-    * is hash-agnostic — SketchSpec runs the invariants on BOTH paths. */
-  private def keyHash(prefix: String, key: Column, portable: Boolean): Column =
-    if (portable) Dedup.h60(concat(lit(prefix), key.cast("string")))
-    else shiftrightunsigned(xxhash64(lit(prefix), key.cast("string")), 4)
+  /** 60-bit nonnegative keyed hash: xxhash64(prefix, key) >>> 4, so the
+    * register/threshold math downstream never sees a sign. Every sketch
+    * GUARANTEE (CMS one-sidedness, KMV exact-below-k, HLL error bound,
+    * mergeability) is hash-agnostic. */
+  private def keyHash(prefix: String, key: Column): Column =
+    shiftrightunsigned(xxhash64(lit(prefix), key.cast("string")), 4)
+
+  /** DuckDB twin of [[keyHash]]: (key, r, h) for every distinct `key` of
+    * the relation `src` and each `prefixes(r)`. */
+  private[graft] def keyHashSql(src: String, key: String, prefixes: Seq[String]): String = {
+    val seeds = prefixes.zipWithIndex
+      .map { case (p, r) => s"($r, ${XxhashSql.prefixSeed(p)})" }.mkString(", ")
+    s"SELECT $key, r, (h >> 4) & 1152921504606846975 AS h FROM (" + XxhashSql.xxh64Sql(
+      s"(SELECT DISTINCT $key FROM $src), (VALUES $seeds) AS sd(r, seed)", key, "seed", "h") + ")"
+  }
 
   /** The d per-row cell indexes of a key: pmod(hash("cms<r>|" || key), w)
     * for r in 0 until d. */
-  private def cmsCells(key: Column, d: Int, w: Int, portable: Boolean): Seq[(Int, Column)] =
+  private def cmsCells(key: Column, d: Int, w: Int): Seq[(Int, Column)] =
     (0 until d).map(r =>
-      r -> pmod(keyHash(s"cms$r|", key, portable), lit(w.toLong)))
+      r -> pmod(keyHash(s"cms$r|", key), lit(w.toLong)))
 
   /** Count-min sketch BUILD: one pass over `rows`, one groupBy — the
     * sketch table (r, cl, c) with d·w counters (absent cells are zero).
     * Counts every occurrence of `key` (a frequency sketch, not distinct).
     * Mergeable: union two sketch tables and groupBy (r, cl) SUM. */
-  def cmsBuild(rows: DataFrame, key: Column, d: Int, w: Int,
-               portableHashing: Boolean = false): DataFrame = {
+  def cmsBuild(rows: DataFrame, key: Column, d: Int, w: Int): DataFrame = {
     require(d >= 1 && d <= 8, s"d=$d out of [1,8]")
     require(w >= 2 && w <= (1 << 20), s"w=$w out of range")
-    rows.select(posexplode(array(cmsCells(key, d, w, portableHashing).map { case (r, cl) =>
+    rows.select(posexplode(array(cmsCells(key, d, w).map { case (r, cl) =>
         struct(lit(r).as("r"), cl.as("cl")) }: _*)).as(Seq("i", "rc")))
       .groupBy(col("rc.r").as("r"), col("rc.cl").as("cl"))
       .agg(count(lit(1)).as("c"))
@@ -66,10 +67,10 @@ object Sketches {
     * Probes with a missing cell estimate through coalesce-0 (only
     * possible for keys absent from the sketched corpus). */
   def cmsEstimate(sketch: DataFrame, probes: DataFrame, key: Column,
-                  d: Int, w: Int, portableHashing: Boolean = false): DataFrame = {
+                  d: Int, w: Int): DataFrame = {
     val keyed = probes.select(key.as("k"))
     val cells = keyed.select(col("k"),
-      posexplode(array(cmsCells(col("k"), d, w, portableHashing).map { case (r, cl) =>
+      posexplode(array(cmsCells(col("k"), d, w).map { case (r, cl) =>
         struct(lit(r).as("r"), cl.as("cl")) }: _*)).as(Seq("i", "rc")))
     cells.select(col("k"), col("rc.r").as("r"), col("rc.cl").as("cl"))
       .join(broadcast(sketch), Seq("r", "cl"), "left")
@@ -121,15 +122,14 @@ object Sketches {
       s"ELSE $raw END)) AS BIGINT)"
   }
 
-  /** Per-group HLL REGISTERS: (grp, reg, m) with reg = h60 % 64 and
-    * m = max over the group's keys of rho(h60 >> 6), where rho = index of
+  /** Per-group HLL REGISTERS: (grp, reg, m) with reg = h % 64 and
+    * m = max over the group's keys of rho(h >> 6), where rho = index of
     * the lowest set bit + 1 (Flajolet's bit-pattern observable; trailing
     * zeros counted exactly via the binary-string suffix — no float log).
     * rho = 55 for the all-zero 54-bit remainder. Registers a group never
     * hits are absent (M = 0). Mergeable: union + groupBy MAX. */
-  def hllRegisters(rows: DataFrame, grp: Column, key: Column,
-                   portableHashing: Boolean = false): DataFrame = {
-    val h = keyHash("hll|", key, portableHashing)
+  def hllRegisters(rows: DataFrame, grp: Column, key: Column): DataFrame = {
+    val h = keyHash("hll|", key)
     val rest = shiftrightunsigned(h, 6)
     val rho = when(rest === 0L, lit(55L))
       .otherwise(length(regexp_extract(bin(rest), "0*$", 0)) + lit(1L))
@@ -138,16 +138,15 @@ object Sketches {
   }
 
   /** Per-group KMV (k-minimum-values / bottom-k) distinct sketch:
-    * (grp, rk, h) — the k smallest DISTINCT h60 hashes of the group's
+    * (grp, rk, h) — the k smallest DISTINCT 60-bit key hashes of the group's
     * keys. Unlike HLL this sketch supports SET OPERATIONS (theta
     * intersection below): the k smallest hashes are a uniform sample of
     * the group's distinct set below its threshold. rank <= k is the
     * WindowGroupLimit shape — each map task forwards at most k rows per
     * group. Mergeable: union two groups' sketches, re-rank, keep k. */
-  def kmvSketch(rows: DataFrame, grp: Column, key: Column, k: Int,
-                portableHashing: Boolean = false): DataFrame = {
+  def kmvSketch(rows: DataFrame, grp: Column, key: Column, k: Int): DataFrame = {
     require(k >= 2 && k <= (1 << 16), s"k=$k out of range")
-    rows.select(grp.as("grp"), keyHash("kmv|", key, portableHashing).as("h"))
+    rows.select(grp.as("grp"), keyHash("kmv|", key).as("h"))
       .distinct()
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("grp")).orderBy(col("h"))))

@@ -19,7 +19,7 @@ class KnobAuditSpec extends AnyFunSuite {
       "SPARK_GRAFT_PIPELINE_ONLY"),
     "graft/Verify.scala" -> Set("SPARK_GRAFT_CPUS"))
   private val Engine =
-    Set("graft.textStagesDir", "graft.annStagesDir", "graft.oracleHashing", "SPARK_GRAFT_CPUS")
+    Set("graft.textStagesDir", "graft.annStagesDir", "SPARK_GRAFT_CPUS")
 
   test("src/main reads only the pinned graft.*, GRAFT_* and SPARK_GRAFT_* names") {
     val root = Paths.get("src/main/scala")

@@ -97,14 +97,20 @@ class SketchSpec extends AnyFunSuite {
     assert(Sketches.cmsJoinSize(wa, wb).as[Long].head() === 0L)
   }
 
-  test("HLL: registers match the sequential md5 hash model exactly") {
+  test("HLL: registers match the sequential XXH64 hash model exactly") {
     val rows = (1 to 500).map(i => ("g", s"item$i")).toDF("grp", "key")
-    val got = Sketches.hllRegisters(rows, col("grp"), col("key"), portableHashing = true)
+    val got = Sketches.hllRegisters(rows, col("grp"), col("key"))
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
-    // sequential model: same h60, reg = low 6 bits, rho = trailing zeros
-    // of the high 54 bits + 1 (55 when zero)
+    // sequential model: xxhash64("hll|", key) chains the seed (key hashed
+    // with seed XXH64("hll|", 42)), h = that >>> 4, reg = low 6 bits,
+    // rho = trailing zeros of the high 54 bits + 1 (55 when zero)
+    def xxh(s: String, seed: Long) = {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, seed)
+    }
     val model = (1 to 500).map { i =>
-      val h = Dedup.md5h60(s"hll|item$i")
+      val h = xxh(s"item$i", xxh("hll|", 42L)) >>> 4
       val (reg, rest) = (h % 64, h >>> 6)
       reg -> (if (rest == 0L) 55L else java.lang.Long.numberOfTrailingZeros(rest) + 1L)
     }.groupBy(_._1).map { case (reg, o) => reg -> o.map(_._2).max }
@@ -220,30 +226,23 @@ class SketchSpec extends AnyFunSuite {
 
   test("production (xxhash64) path: every hash-agnostic guarantee still holds") {
     // CMS one-sidedness
-    val sk = Sketches.cmsBuild(skewed, col("k"), 4, 16, portableHashing = false)
+    val sk = Sketches.cmsBuild(skewed, col("k"), 4, 16)
     val exact = skewed.groupBy(col("k")).agg(count(lit(1)).as("exact"))
       .withColumnRenamed("k", "k2")
-    val under = Sketches.cmsEstimate(sk, skewed.distinct(), col("k"), 4, 16,
-        portableHashing = false)
+    val under = Sketches.cmsEstimate(sk, skewed.distinct(), col("k"), 4, 16)
       .join(exact, col("k") === col("k2")).where(col("est") < col("exact")).count()
     assert(under == 0L)
     // KMV exact-below-k
     val tiny = (1 to 20).map(i => ("t", s"x$i")).toDF("grp", "key")
     val est = Sketches.kmvEstimate(
-      Sketches.kmvSketch(tiny, col("grp"), col("key"), 32, portableHashing = false), 32)
+      Sketches.kmvSketch(tiny, col("grp"), col("key"), 32), 32)
       .collect()(0).getLong(1)
     assert(est == 20000L)
     // HLL bounded error on a planted cardinality
     val rows = (1 to 5000).map(i => ("g", s"l$i")).toDF("grp", "key")
-    val h = Sketches.hllEstimate(Sketches.hllRegisters(rows, col("grp"), col("key"),
-      portableHashing = false)).collect()(0).getLong(1) / 1000.0
+    val h = Sketches.hllEstimate(Sketches.hllRegisters(rows, col("grp"), col("key")))
+      .collect()(0).getLong(1) / 1000.0
     assert(math.abs(h / 5000.0 - 1.0) < 0.35, s"fast-path HLL estimate $h vs 5000")
-    // and the two paths are genuinely different hash families
-    val a = Sketches.kmvSketch(tiny, col("grp"), col("key"), 32, portableHashing = true)
-      .collect().map(_.getLong(1)).toSet
-    val b = Sketches.kmvSketch(tiny, col("grp"), col("key"), 32, portableHashing = false)
-      .collect().map(_.getLong(1)).toSet
-    assert(a != b)
   }
 
   test("HLL: duplicates never move the estimate (distinct-count semantics)") {

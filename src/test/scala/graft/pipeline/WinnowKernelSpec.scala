@@ -7,9 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The r6 per-row winnowing kernel replaced the SQL window form
   * (posexplode grams -> per-doc window min -> distinct). This spec pins
-  * kernel == window-form on both hash paths — the production xxhash64
-  * path has no DuckDB twin, so this is its only cross-check (the md5
-  * path is additionally oracle-checked end-to-end by q_text_winnow). */
+  * kernel == window-form inside Spark; HashTwinSpec checks the same query
+  * against its DuckDB twin, non-BMP text included. */
 class WinnowKernelSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
@@ -55,15 +54,5 @@ class WinnowKernelSpec extends AnyFunSuite {
     assert(viaQuery(dir) == expected)
     assert(expected.exists(_._1 == 2L), "len-8 doc must emit its one position")
     assert(!expected.exists(_._1 == 3L), "len-in-[5,8) docs emit nothing")
-  }
-
-  test("kernel == SQL window form, md5-portable oracle path") {
-    val dir = stage()
-    System.setProperty("graft.oracleHashing", "1")
-    try {
-      val expected = windowForm(Dedup.h60(col("g")))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(viaQuery(dir) == expected)
-    } finally System.clearProperty("graft.oracleHashing")
   }
 }
